@@ -55,10 +55,20 @@ object Bench {
     // builds otherwise land on whichever query touches an artifact
     // first, making its number an order-dependent accident — with the
     // prewarm, every per-query time is steady serving by construction
-    try graft.queries.PipelineQueries.prewarm(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.queries.ExtendedQueries.prewarm(spark, sfDir)
-    catch { case _: Throwable => () }
+    // a failure is reported by name and never timed: a query that
+    // throws would otherwise read as a fast result
+    val failed = scala.collection.mutable.SortedSet.empty[String]
+    def attempt(name: String)(body: => Unit): Boolean =
+      try { body; true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        failed += name
+        false
+      }
+    attempt("prewarm:pipeline")(
+      graft.queries.PipelineQueries.prewarm(spark, sfDir))
+    attempt("prewarm:extended")(
+      graft.queries.ExtendedQueries.prewarm(spark, sfDir))
     // INTER-QUERY STATE HYGIENE (r18 verdict finding #4): iterative
     // operators localCheckpoint per round, and standing-model frames
     // checkpoint per invocation — those persisted blocks outlive their
@@ -91,15 +101,15 @@ object Bench {
     // two timed passes, min per query: first-touch JIT/codegen noise
     // lands on whichever query a hash-map ordering puts early; the min
     // is the reproducible steady-state number
-    def pass(): Map[String, Double] = SparkEntry.queries.map {
+    def pass(): Map[String, Double] = SparkEntry.queries.flatMap {
       case (name, fn) =>
         val g0 = gcNowMs()
         val t0 = System.nanoTime()
-        try { run(fn(spark, sfDir)) } catch { case _: Throwable => () }
+        val ok = attempt(name)(run(fn(spark, sfDir)))
         val sec = (System.nanoTime() - t0) / 1e9
         gcByQuery(name) = gcByQuery(name) :+ (gcNowMs() - g0)
         scrub()
-        name -> sec
+        if (ok) Some(name -> sec) else None
     }
     // 1-minute system load BEFORE the timed passes: round-over-round
     // comparisons need to know whether the bench window was contended
@@ -133,8 +143,12 @@ object Bench {
     val loadMid = loadavg // per-PASS load: which pass a spike hit matters
     val p2 = pass()
     val loadAfter = loadavg
-    val results = p1.map { case (k, v) => k -> math.min(v, p2(k)) }
+    val results = p1.collect { case (k, v) if !failed(k) =>
+      k -> math.min(v, p2(k)) }
     val total = if (results.nonEmpty) results.values.sum else 0.0
+    // every number in the contract lines is locale-independent: under
+    // a decimal-comma default locale `%.3f` would print `1,234`
+    def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
     // the driver captures stdout through a bounded ~2 KB tail window,
     // so EVERYTHING that must survive (per-query map + summary +
     // sbt's trailing success line) has to fit in it together — at 183
@@ -174,8 +188,10 @@ object Bench {
     // the scalar summary line stays LAST (always parseable from the
     // tail) and any consumer of the full stdout gets the flat map.
     val qsFlat = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"calib_s":$calibS,"load1m":[$loadBefore,$loadMid,$loadAfter],"queries":$qsFlat,"sf":"$sfDir"}""")
+      .map { case (k, v) => s""""$k":${num(v)}""" }.mkString("{", ",", "}")
+    val failures = s""""n_failed":${failed.size},"failed":""" +
+      failed.map(n => s""""$n"""").mkString("[", ",", "]")
+    println(s"""{"metric":"total","value":${num(total)},"unit":"sec","n_queries":${results.size},$failures,"calib_s":${num(calibS)},"load1m":[$loadBefore,$loadMid,$loadAfter],"queries":$qsFlat,"sf":"$sfDir"}""")
     // BENCH_FULL carries BOTH raw passes next to the min: a
     // cross-round comparison can then tell machine noise (passes
     // disagree, min stable) from a real regression (both passes
@@ -183,19 +199,19 @@ object Bench {
     val qsFull = results.toSeq.sortBy(_._1)
       .map { case (k, v) =>
         val gc = gcByQuery(k).map(_.toString).mkString("[", ",", "]")
-        f""""$k":{"min":$v%.3f,"runs":[${p1(k)}%.3f,${p2(k)}%.3f],"gc_ms":$gc}"""
+        s""""$k":{"min":${num(v)},"runs":[${num(p1(k))},${num(p2(k))}],"gc_ms":$gc}"""
       }
       .mkString("{", ",", "}")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(sys.env.getOrElse(
         "SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_FULL.json")),
-      (s"""{"metric":"total","value":$total,"unit":"sec","calib_s":$calibS,"load1m":[$loadBefore,$loadMid,$loadAfter],"queries":$qsFull,"sf":"$sfDir"}""" + "\n")
+      (s"""{"metric":"total","value":${num(total)},"unit":"sec",$failures,"calib_s":${num(calibS)},"load1m":[$loadBefore,$loadMid,$loadAfter],"queries":$qsFull,"sf":"$sfDir"}""" + "\n")
         .getBytes("UTF-8"))
     catch { case _: Exception => () }
     // short standalone summary LAST: always survives tail truncation.
     // Distinct metric name so a consumer aggregating by metric never
     // double-counts the total.
-    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","n_queries":${results.size},"calib_s":$calibS,"load1m":[$loadBefore,$loadMid,$loadAfter],"sf":"$sfDir"}""")
+    println(s"""{"metric":"total_summary","value":${num(total)},"unit":"sec","n_queries":${results.size},$failures,"calib_s":${num(calibS)},"load1m":[$loadBefore,$loadMid,$loadAfter],"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -14,26 +14,19 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * identical decimal value => identical double in both engines.
   */
 object Tables {
-  /** Base-table loads are memoized per (session, path): Spark 4
-    * resolves each `spark.read.parquet` call in the ANALYZER
+  /** Base-table loads are held per (session, path) in [[Artifacts]]:
+    * Spark 4 resolves each `spark.read.parquet` call in the ANALYZER
     * (`ResolveDataSource` — schema inference + file listing), and a
     * rule-time dump over the 253-query surface showed that rule alone
     * costing ~19 s per bench pass (~53 ms x ~355 fresh reads; 2/3 of
     * all analyzer/optimizer rule time). Reusing the resolved relation
     * removes that driver-side planning cost at EVERY scale — this is
-    * exactly what a catalog table does with its metadata. Not result
-    * caching: every action over the memoized frame still scans the
-    * parquet files. Contract (matches the layoutDir memo): a base
-    * table path is written AT MOST ONCE per session, BEFORE its first
-    * load — true for the static test dirs and every fixture temp dir;
-    * layout paths that fold in place keep their fresh per-call reads
-    * in the operators. */
-  private val loadCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * exactly what a catalog table does with its metadata. Layout paths
+    * that fold in place keep their fresh per-call reads in the
+    * operators. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    loadCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    loadCache.getOrElseUpdate((spark, s"$dir/$name.parquet"),
-      spark.read.parquet(s"$dir/$name.parquet"))
+    val path = s"$dir/$name.parquet"
+    Artifacts.perSession(spark, "load", path)(spark.read.parquet(path))
   }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")

@@ -21,8 +21,10 @@ private[graft] object DriverParquet {
     * Scans the part files in name order and returns the first row
     * found (the artifacts are written as exactly one row; empty part
     * files from over-partitioned writes are skipped). Throws on a
-    * missing directory, zero rows, or unreadable/ill-typed files —
-    * callers map those to their own absent/corrupt semantics. */
+    * missing directory or unreadable files; zero rows, or a field that
+    * is missing or not int64 (an INT32 marker), throw an
+    * IllegalStateException naming the marker dir. Callers map those
+    * to their own absent/corrupt semantics. */
   def headLongs(spark: SparkSession, dir: String,
       fields: Seq[String]): Seq[Long] = {
     val conf = spark.sessionState.newHadoopConf()
@@ -41,7 +43,12 @@ private[graft] object DriverParquet {
         .withConf(conf).build()
       try {
         val g = reader.read()
-        if (g != null) return fields.map(f => g.getLong(f, 0))
+        if (g != null) return fields.map(f =>
+          try g.getLong(f, 0)
+          catch { case scala.util.control.NonFatal(e) =>
+            throw new IllegalStateException(
+              s"marker $dir: field $f is not a readable int64", e)
+          })
       } finally reader.close()
     }
     throw new IllegalStateException(

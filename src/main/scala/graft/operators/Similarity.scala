@@ -1754,8 +1754,8 @@ object Similarity {
   }
 
   /** The IVF-PQ TRAINING alone — `(coarse, residualBooks)` — exposed
-    * so a caller can memoize the offline artifacts (the kgCents
-    * discipline) and share them across serving queries; the encoded
+    * so a caller can hold the offline artifacts in [[graft.Artifacts]]
+    * and share them across serving queries; the encoded
     * corpus is deliberately not returned (corpus-sized — it stays in
     * the serving path, or on disk via [[pqIndexWrite]]). */
   def ivfPqTrain(corpus: DataFrame, numCentroids: Int = 8, m: Int = 4,

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.Tables._
 import graft.operators.{CorpusStats, Decontaminate, Dedup, Layout, Mixture, Multimodal, Packing, Profile, Retrieval, Similarity, TextAnalysis, VectorStats}
 import graft.streaming.EventStreams
@@ -2104,91 +2105,45 @@ object PipelineQueries {
       FROM a${Mx10Rounds} a JOIN src s USING (source)
       ORDER BY s.source"""
 
-  /** t23's merge model, memoized per sf-dir: the encode query's input
-    * is the TRAINED rule list (t18 gates the training itself), so
-    * repeated invocations — bench passes, verify re-runs — reuse the
-    * 8-row artifact instead of re-running the 8 training jobs. */
   /** The ss14-family trained coarse quantizer (16 centroids, 2 Lloyd
-    * rounds over the full embeddings corpus), memoized per sf-dir —
-    * the offline artifact ss14/ss15/dd20 all probe (the [[bpeRules]]
-    * discipline): repeated invocations — bench passes, verify
-    * re-runs — reuse the 16-row frame instead of re-running the
-    * training jobs. Training is deterministic, so the shared frame is
-    * bit-identical to per-query training (each oracle still replays
-    * the full Lloyd chain independently). */
-  // the TRAINED DATA (16 rows + schema) memoizes per sf-dir — plain
-  // Scala values, session-free like bpeRulesCache; the FRAME memoizes
-  // per (session, dir), because a localCheckpoint's blocks die with
-  // the session that made them and a frame reused across sessions
-  // (bench/test harness restarts in one JVM) would read dead blocks
-  private val kgCentsData = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.types.StructType,
-      java.util.List[org.apache.spark.sql.Row])]
-  private val kgCentsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  /** Drops cache entries keyed by already-stopped sessions — the
-    * multi-session-per-JVM harness would otherwise leak one entry per
-    * restarted session. Called on each cache access (entry counts are
-    * tiny: one per (session, sf-dir)). */
-  private def evictStopped[V](
-      m: scala.collection.concurrent.TrieMap[(SparkSession, String), V])
-      : Unit =
-    m.keysIterator.filter(_._1.sparkContext.isStopped).foreach(m.remove)
-  private def kgCents(s: SparkSession, d: String): DataFrame = {
-    evictStopped(kgCentsCache)
-    kgCentsCache.getOrElseUpdate((s, d), {
-      val (schema, rows) = kgCentsData.getOrElseUpdate(d, {
-        val trained = graft.operators.VectorStats
-          .kmeansCentroids(embeddings(s, d), 16, 2)
-        (trained.schema, java.util.Arrays.asList(trained.collect(): _*))
-      })
-      s.createDataFrame(rows, schema)
-    })
-  }
+    * rounds over the full embeddings corpus), a collected-rows
+    * artifact in [[graft.Artifacts]] — the offline artifact
+    * ss14/ss15/dd20 all probe: repeated invocations — bench passes,
+    * verify re-runs — reuse the 16-row frame instead of re-running
+    * the training jobs. Training is deterministic, so the shared
+    * frame is bit-identical to per-query training (each oracle still
+    * replays the full Lloyd chain independently). */
+  private def kgCents(s: SparkSession, d: String): DataFrame =
+    Artifacts.collected(s, "kgCents", d)(Seq(graft.operators
+      .VectorStats.kmeansCentroids(embeddings(s, d), 16, 2))).head
 
   /** The k=3 kNN GRAPH over the embeddings corpus — the standing
     * structure ss14 documents as "what semantic clustering,
     * SemDeDup-style pruning and graph community detection all start
-    * from", memoized per (session, sf-dir) like the copurchase edge
-    * list (corpus-sized derived frame, eagerly checkpointed,
-    * prewarmed). dd20 and ss19 consume it; ss14 itself stays the
-    * LIVE-BUILD query (the family's construction member, like q70 for
-    * LPA), so the build cost remains a measured number. */
-  private val knnGraphCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def knnGraphFrame(s: SparkSession, d: String): DataFrame = {
-    evictStopped(knnGraphCache)
-    knnGraphCache.getOrElseUpdate((s, d),
+    * from", a checkpointed frame in [[graft.Artifacts]] like the
+    * copurchase edge list (corpus-sized derived frame, prewarmed).
+    * dd20 and ss19 consume it; ss14 itself stays the LIVE-BUILD query
+    * (the family's construction member, like q70 for LPA), so the
+    * build cost remains a measured number. */
+  private def knnGraphFrame(s: SparkSession, d: String): DataFrame =
+    Artifacts.frame(s, "knnGraph", d)(
       Similarity.knnGraph(embeddings(s, d), k = 3, numCentroids = 16,
-        nprobe = 2, cents = Some(kgCents(s, d)))
-        .localCheckpoint())
-  }
-
-  /** Frame-valued standing artifacts, memoized per (session, key) and
-    * eagerly checkpointed (the copurchase-edge-list discipline for
-    * corpus-sized derived frames): prewarm materializes them, the
-    * bench's post-prewarm RDD snapshot protects them from the
-    * inter-query scrub, and every consumer probes steady state. */
-  private val frameCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def frameMemo(s: SparkSession, key: String)(
-      build: => DataFrame): DataFrame = {
-    evictStopped(frameCache)
-    frameCache.getOrElseUpdate((s, key), build.localCheckpoint())
-  }
+        nprobe = 2, cents = Some(kgCents(s, d))))
 
   /** The STANDING in-memory BM25 index over the full corpus — t25's
     * fold base, t27/t29's rm3 index ("a standing index is
-    * materialized once — that is its contract"). t22 remains the
-    * family's live-build query. NOT widened: the checkpoint keeps the
-    * corpus's natural scan partitioning (measured: a forced
-    * 32-partition checkpoint made every one of t29's ~8 reader stages
-    * pay 32-task scheduling overhead — +1.6 s across three runs —
-    * while the memoization itself, not the parallelism, carried the
-    * win; at cluster scale the index inherits the corpus's real
-    * multi-split partitioning anyway). */
+    * materialized once — that is its contract"), a checkpointed frame
+    * in [[graft.Artifacts]]. t22 remains the family's live-build
+    * query. NOT widened: the checkpoint keeps the corpus's natural
+    * scan partitioning (measured: a forced 32-partition checkpoint
+    * made every one of t29's ~8 reader stages pay 32-task scheduling
+    * overhead — +1.6 s across three runs — while the memoization
+    * itself, not the parallelism, carried the win; at cluster scale
+    * the index inherits the corpus's real multi-split partitioning
+    * anyway). */
   private def bm25IndexFrame(s: SparkSession, d: String): DataFrame =
-    frameMemo(s, s"bm25idx@$d")(Retrieval.bm25Index(documents(s, d)))
+    Artifacts.frame(s, "bm25idx", d)(
+      Retrieval.bm25Index(documents(s, d)))
 
   /** The frozen standing index's collection statistics — the
     * vocabulary-sized df table and the 1-row corpus census — memoized
@@ -2199,17 +2154,17 @@ object PipelineQueries {
     * index's stats must track its current membership. */
   private def bm25IdxStats(s: SparkSession,
       d: String): (DataFrame, DataFrame) =
-    (frameMemo(s, s"bm25df@$d")(bm25IndexFrame(s, d)
+    (Artifacts.frame(s, "bm25df", d)(bm25IndexFrame(s, d)
         .groupBy("fp").agg(count(lit(1)).as("df"))),
-      frameMemo(s, s"bm25tot@$d")(bm25IndexFrame(s, d)
+      Artifacts.frame(s, "bm25tot", d)(bm25IndexFrame(s, d)
         .select("doc_id", "len").distinct()
         .agg(count(lit(1)).as("n_docs"), sum("len").as("total_len"))))
 
   private def dc6IdxStats(s: SparkSession,
       d: String): (DataFrame, DataFrame) =
-    (frameMemo(s, s"bm25df_dc6@$d")(dc6IndexFrame(s, d)
+    (Artifacts.frame(s, "bm25df_dc6", d)(dc6IndexFrame(s, d)
         .groupBy("fp").agg(count(lit(1)).as("df"))),
-      frameMemo(s, s"bm25tot_dc6@$d")(dc6IndexFrame(s, d)
+      Artifacts.frame(s, "bm25tot_dc6", d)(dc6IndexFrame(s, d)
         .select("doc_id", "len").distinct()
         .agg(count(lit(1)).as("n_docs"), sum("len").as("total_len"))))
 
@@ -2222,18 +2177,18 @@ object PipelineQueries {
     * many-cheap-reader t25/t27/t29 frame stays natural (see
     * bm25IndexFrame's doc for that measurement). */
   private def dc6IndexFrame(s: SparkSession, d: String): DataFrame =
-    frameMemo(s, s"bm25idx_dc6@$d")(Retrieval.bm25Index(graft.Tables
+    Artifacts.frame(s, "bm25idx_dc6", d)(Retrieval.bm25Index(graft.Tables
       .widen(documents(s, d).filter(col("doc_id") % 500 =!= 3))))
 
   /** t28's standing TF-IDF df model (frozen on the 9/10 split). */
   private def tfidfModelFrame(s: SparkSession, d: String): DataFrame =
-    frameMemo(s, s"tfidf@$d")(Retrieval.tfidfModel(
+    Artifacts.frame(s, "tfidf", d)(Retrieval.tfidfModel(
       documents(s, d).filter(col("doc_id") % 10 =!= 0)))
 
   /** ds2's standing DSIR rate model (frozen on the 9/10 raw split vs
     * the src0 target exemplars). */
   private def dsirModelFrame(s: SparkSession, d: String): DataFrame =
-    frameMemo(s, s"dsir@$d") {
+    Artifacts.frame(s, "dsir", d) {
       val all = documents(s, d)
       Mixture.dsirModel(
         all.filter(col("source") =!= "src0")
@@ -2241,86 +2196,46 @@ object PipelineQueries {
         all.filter(col("source") === "src0"), buckets = 1024)
     }
 
+  /** ss16's standing-index quantizer: kgCents' training chain over
+    * the REFERENCE 9/10 split (the corpus the standing index froze
+    * on, without the arriving batch). */
+  private def kgCentsRef(s: SparkSession, d: String): DataFrame =
+    Artifacts.collected(s, "kgCentsRef", d)(Seq(
+      graft.operators.VectorStats.kmeansCentroids(
+        embeddings(s, d).filter(col("vec_id") % 10 =!= 0), 16, 2))).head
+
+  /** ss31's per-side coarse quantizers (trained on each label split
+    * alone — the bitext miner's offline artifacts). */
+  private def bitextCents(s: SparkSession, d: String,
+      label: Int): DataFrame =
+    Artifacts.collected(s, "bitextCents", s"$d#lab$label")(Seq(
+      graft.operators.VectorStats.kmeansCentroids(
+        embeddings(s, d).filter(col("label") === label)
+          .select("vec_id", "embedding"), 8, 2))).head
+
   /** The trained unigram vocabulary at the t33 params — the standing
     * model frame t34's encode and t36's coverage census PROBE (t33
     * itself remains the training query and keeps the training in its
     * timed window, exactly as t18 trains while t23 probes the
     * memoized [[bpeRules]]). Deterministic EM ⇒ identical rows. */
-  private val uniVocabData = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.types.StructType,
-      java.util.List[org.apache.spark.sql.Row])]
-  private val uniVocabCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def collectedMemo(s: SparkSession, d: String,
-      data: scala.collection.concurrent.TrieMap[String,
-        (org.apache.spark.sql.types.StructType,
-          java.util.List[org.apache.spark.sql.Row])],
-      cache: scala.collection.concurrent.TrieMap[(SparkSession, String),
-        DataFrame])(build: => DataFrame): DataFrame = {
-    evictStopped(cache)
-    cache.getOrElseUpdate((s, d), {
-      val (sch, rows) = data.getOrElseUpdate(d, {
-        val f = build
-        (f.schema, java.util.Arrays.asList(f.collect(): _*))
-      })
-      s.createDataFrame(rows, sch)
-    })
-  }
-  /** ss16's standing-index quantizer: kgCents' training chain over
-    * the REFERENCE 9/10 split (the corpus the standing index froze
-    * on, without the arriving batch). */
-  private val kgCentsRefData = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.types.StructType,
-      java.util.List[org.apache.spark.sql.Row])]
-  private val kgCentsRefCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def kgCentsRef(s: SparkSession, d: String): DataFrame =
-    collectedMemo(s, d, kgCentsRefData, kgCentsRefCache)(
-      graft.operators.VectorStats.kmeansCentroids(
-        embeddings(s, d).filter(col("vec_id") % 10 =!= 0), 16, 2))
-
-  /** ss31's per-side coarse quantizers (trained on each label split
-    * alone — the bitext miner's offline artifacts). */
-  private val bitextCentsData = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.types.StructType,
-      java.util.List[org.apache.spark.sql.Row])]
-  private val bitextCentsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def bitextCents(s: SparkSession, d: String,
-      label: Int): DataFrame =
-    collectedMemo(s, s"$d#lab$label", bitextCentsData, bitextCentsCache)(
-      graft.operators.VectorStats.kmeansCentroids(
-        embeddings(s, d).filter(col("label") === label)
-          .select("vec_id", "embedding"), 8, 2))
-
   private def unigramVocab(s: SparkSession, d: String): DataFrame =
-    collectedMemo(s, d, uniVocabData, uniVocabCache)(
+    Artifacts.collected(s, "unigramVocab", d)(Seq(
       graft.operators.Tokenizer.unigramTrain(documents(s, d),
-        rounds = 2, maxPiece = 4, minCount = 2, maxWordLen = 12))
+        rounds = 2, maxPiece = 4, minCount = 2, maxWordLen = 12))).head
 
   /** t43's twin over the multilingual script fixture (script tier). */
-  private val uniVocabScriptData = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.types.StructType,
-      java.util.List[org.apache.spark.sql.Row])]
-  private val uniVocabScriptCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
   private def unigramVocabScript(s: SparkSession, d: String): DataFrame =
-    collectedMemo(s, d, uniVocabScriptData, uniVocabScriptCache)(
+    Artifacts.collected(s, "unigramVocabScript", d)(Seq(
       graft.operators.Tokenizer.unigramTrain(
         scriptFixture(documents(s, d)), rounds = 2, maxPiece = 4,
-        minCount = 2, maxWordLen = 12, scriptTier = true))
+        minCount = 2, maxWordLen = 12, scriptTier = true))).head
 
   /** The trained pocket-perceptron model at the t30 params — the
     * standing artifact t31's CALIBRATION probes (t30 remains the
     * training query). Deterministic full-batch rounds ⇒ identical
     * 1-row model. */
-  private val clfModelData = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.types.StructType,
-      java.util.List[org.apache.spark.sql.Row])]
-  private val clfModelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
   private def classifierModel(s: SparkSession, d: String): DataFrame =
-    collectedMemo(s, d, clfModelData, clfModelCache)({
+    Artifacts.collected(s, "classifierModel", d)(Seq({
       val all = documents(s, d)
       val stop = Seq("the", "a", "of", "and", "to", "in", "is")
       TextAnalysis.classifierTrain(
@@ -2328,80 +2243,53 @@ object PipelineQueries {
           when(size(filter(TextAnalysis.tokens(col("text")),
             t => t.isin(stop: _*))) >= 4, 1L).otherwise(-1L)),
         dim = 64, rounds = 8)
-    })
+    })).head
 
   /** Trained PQ codebooks over the full embeddings corpus (m=4,
-    * ksub=8, iters=2) — the [[kgCents]] discipline for the PQ
-    * family's offline artifact: ss8, ss12 and ss13 all rank under the
-    * SAME deterministic training, so each pass was re-running 4×
-    * per-subspace Lloyd chains per query for bit-identical 8-row
-    * books. Trained once per sf-dir (plain collected rows,
-    * session-free), re-framed per session. Results are unchanged by
-    * kmeans determinism — the oracle replays training independently. */
-  private val pqBooksData = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(org.apache.spark.sql.types.StructType,
-      java.util.List[org.apache.spark.sql.Row])]]
-  private val pqBooksCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[DataFrame]]
-  private def pqBooks(s: SparkSession, d: String): Seq[DataFrame] = {
-    evictStopped(pqBooksCache)
-    pqBooksCache.getOrElseUpdate((s, d), {
-      val data = pqBooksData.getOrElseUpdate(d,
-        Similarity.pqCodebooks(embeddings(s, d), m = 4, ksub = 8,
-          iters = 2)
-          .map(b => (b.schema, java.util.Arrays.asList(b.collect(): _*))))
-      data.map { case (sch, rows) => s.createDataFrame(rows, sch) }
-    })
-  }
+    * ksub=8, iters=2), the PQ family's offline artifact, held as
+    * collected rows in [[graft.Artifacts]]: ss8, ss12 and ss13 all
+    * rank under the SAME deterministic training, so each pass was
+    * re-running 4× per-subspace Lloyd chains per query for
+    * bit-identical 8-row books. Results are unchanged by kmeans
+    * determinism — the oracle replays training independently. */
+  private def pqBooks(s: SparkSession, d: String): Seq[DataFrame] =
+    Artifacts.collected(s, "pqBooks", d)(
+      Similarity.pqCodebooks(embeddings(s, d), m = 4, ksub = 8,
+        iters = 2))
 
   /** The trained IVF-PQ offline state at the ss9 params (coarse=8,
     * m=4, ksub=8, iters=2): the coarse quantizer (with self-dots) and
     * the m RESIDUAL codebooks — shared by ss9 and ss12's ivfpq row,
     * and the coarse frame alone by ss12's ivfsq8 row and ss18 (whose
     * quantizer is the same kmeansCentroids(corpus, 8, 2) chain).
-    * Collected-row memo like [[kgCents]]; deterministic training ⇒
-    * identical results. */
-  private val ivfPqArtsData = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(org.apache.spark.sql.types.StructType,
-      java.util.List[org.apache.spark.sql.Row])]]
-  private val ivfPqArtsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, Seq[DataFrame])]
+    * A collected-rows artifact in [[graft.Artifacts]]; deterministic
+    * training ⇒ identical results. */
   private def ivfPqArts(s: SparkSession, d: String)
     : (DataFrame, Seq[DataFrame]) = {
-    evictStopped(ivfPqArtsCache)
-    ivfPqArtsCache.getOrElseUpdate((s, d), {
-      val data = ivfPqArtsData.getOrElseUpdate(d, {
-        val (coarse, books) = Similarity.ivfPqTrain(embeddings(s, d),
-          numCentroids = 8, m = 4, ksub = 8, iters = 2)
-        (coarse +: books)
-          .map(f => (f.schema, java.util.Arrays.asList(f.collect(): _*)))
-      })
-      val frames = data.map { case (sch, rows) =>
-        s.createDataFrame(rows, sch) }
-      (frames.head, frames.tail)
-    })
+    val frames = Artifacts.collected(s, "ivfPqArts", d) {
+      val (coarse, books) = Similarity.ivfPqTrain(embeddings(s, d),
+        numCentroids = 8, m = 4, ksub = 8, iters = 2)
+      coarse +: books
+    }
+    (frames.head, frames.tail)
   }
 
-  // written-layout paths memoize per (session, kind@dir) so a repeat
-  // invocation (bench pass after verify, concurrent suites on one
-  // session) reuses the already-written index instead of rewriting
-  // part files out from under a previously returned DataFrame's file
-  // listing; the nonce keeps distinct (session, dir) layouts from
-  // ever colliding on disk. Stopped sessions evict on access.
+  // written-layout paths are per-session values in Artifacts, keyed
+  // by kind@dir, so a repeat invocation (bench pass after verify,
+  // concurrent suites on one session) reuses the already-written
+  // index instead of rewriting part files out from under a previously
+  // returned DataFrame's file listing; the nonce keeps distinct
+  // (session, dir) layouts from ever colliding on disk.
   private val layoutSeq = new java.util.concurrent.atomic.AtomicLong
-  private val layoutCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
   private def layoutDir(s: SparkSession, d: String, kind: String)(
-      write: String => Unit): String = {
-    evictStopped(layoutCache)
-    layoutCache.getOrElseUpdate((s, s"$kind@$d"), {
+      write: String => Unit): String =
+    Artifacts.perSession(s, "layout", s"$kind@$d") {
       val p = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_${kind}_${s.sparkContext.applicationId}_" +
           s"${layoutSeq.incrementAndGet()}").getPath
       write(p)
       p
-    })
-  }
+    }
 
   /** Force-build every memoized standing artifact this pack keys on
     * (session, sf-dir): the trained kg centroids, the BPE merge rules,
@@ -2445,10 +2333,13 @@ object PipelineQueries {
       .foreach(n => queries(n)(s, d))
   }
 
-  private val bpeRulesCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, String)]]
+  /** t23's merge model, a session-free value in [[graft.Artifacts]]:
+    * the encode query's input is the TRAINED rule list (t18 gates the
+    * training itself), so repeated invocations — bench passes, verify
+    * re-runs — reuse the 8-row artifact instead of re-running the 8
+    * training jobs. */
   private def bpeRules(s: SparkSession, d: String): Seq[(String, String)] =
-    bpeRulesCache.getOrElseUpdate(d,
+    Artifacts.value("bpeRules", d)(
       graft.operators.Tokenizer.bpeTrain(documents(s, d), merges = 8)
         .orderBy("rnd").collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq)

@@ -143,23 +143,32 @@ class DeltaShareScanBuilder(
     * `limitHint = limit + offset`) and the scan re-queries. */
   private var offsetProbe: Option[TableFiles] = None
 
+  /** One plan-time `/query` POST under the pushed partition filters,
+    * and the exact client-side partition pass over its files: the raw
+    * response, and the same file set a row-reading scan of this query
+    * would read. */
+  private def probeFiles(): (TableFiles, Seq[FileAction]) = {
+    val resp = new DeltaSharingClient(addr.profile)
+      .queryTable(addr.share, addr.schema, addr.table,
+        jsonPredicateHints = PredicateHints.buildHints(
+          partitionFilters.toSeq,
+          StructType(dataSchema.fields ++ partitionSchema.fields))._1,
+        predicateHints = PredicateHints.legacyHints(
+          partitionFilters.toSeq, partitionSchema),
+        version = addr.versionAsOf,
+        timestamp = addr.timestampAsOf)
+    (resp, resp.files.filter(f => partitionFilters.forall(
+      PartitionValues.evalFilter(_, f.partitionValues, partitionSchema))))
+  }
+
   override def pushOffset(n: Int): Boolean = {
     if (n <= 0) return false
     if (dataFilters.nonEmpty || topN.isDefined || limit.isDefined ||
         !partitionFilters.forall(PartitionValues.isExact(_, partitionSchema)))
       return false
-    val hints = PredicateHints.buildHints(partitionFilters.toSeq,
-      StructType(dataSchema.fields ++ partitionSchema.fields))._1
-    val legacy = PredicateHints.legacyHints(partitionFilters.toSeq,
-      partitionSchema)
-    val resp =
-      try {
-        new DeltaSharingClient(addr.profile)
-          .queryTable(addr.share, addr.schema, addr.table,
-            jsonPredicateHints = hints, predicateHints = legacy,
-            version = addr.versionAsOf,
-            timestamp = addr.timestampAsOf)
-      } catch {
+    val (resp, files) =
+      try probeFiles()
+      catch {
         case e: Exception =>
           // refusing is CORRECT (Spark keeps the Offset operator) but
           // must be observable: a flaky server silently degrading
@@ -169,9 +178,6 @@ class DeltaShareScanBuilder(
               s".${addr.table}: plan-time /query probe failed", e)
           return false
       }
-    val files = resp.files
-      .filter(f => partitionFilters.forall(
-        PartitionValues.evalFilter(_, f.partitionValues, partitionSchema)))
     if (!files.forall(_.stats.flatMap(FileStats.parse)
         .exists(_.numRecords.isDefined))) {
       DeltaShareScanBuilder.log.info(
@@ -307,22 +313,7 @@ class DeltaShareScanBuilder(
         .getOrElse(return None)
       case _ => return None
     }
-    // one /query POST, exact client-side partition pruning — the same
-    // file set a row-reading scan of this query would read
-    val hints = PredicateHints.buildHints(partitionFilters.toSeq,
-      StructType(dataSchema.fields ++ partitionSchema.fields))._1
-    val legacy = PredicateHints.legacyHints(partitionFilters.toSeq,
-      partitionSchema)
-    val files =
-      try {
-        new DeltaSharingClient(addr.profile)
-          .queryTable(addr.share, addr.schema, addr.table,
-            jsonPredicateHints = hints, predicateHints = legacy,
-            version = addr.versionAsOf,
-            timestamp = addr.timestampAsOf).files
-          .filter(f => partitionFilters.forall(
-            PartitionValues.evalFilter(_, f.partitionValues, partitionSchema)))
-      } catch { case _: Exception => return None }
+    val files = try probeFiles()._2 catch { case _: Exception => return None }
     // a DV-bearing file's stats count DELETED rows too (numRecords,
     // and potentially extrema sitting on deleted rows) — stats-only
     // answers would be wrong, so refuse and fall back to reading rows
@@ -729,7 +720,8 @@ class DeltaShareScan(
       // stats.numRecords counts PHYSICAL rows incl. DV-deleted ones;
       // subtract the descriptor's cardinality so join-size planning
       // (broadcast decisions) sees the surviving row count
-      val counts = files.map(f => f.stats.flatMap(parseNumRecords)
+      val counts = files.map(f => f.stats.flatMap(FileStats.parse)
+        .flatMap(_.numRecords)
         .map(n => math.max(0L,
           n - f.deletionVector.map(_.cardinality).getOrElse(0L))))
       if (counts.nonEmpty && counts.forall(_.isDefined))
@@ -737,13 +729,6 @@ class DeltaShareScan(
       else OptionalLong.empty()
     }
   }
-
-  private def parseNumRecords(stats: String): Option[Long] =
-    try {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(stats)
-      if (node.hasNonNull("numRecords")) Some(node.get("numRecords").asLong())
-      else None
-    } catch { case _: Exception => None }
 
   override def planInputPartitions(): Array[InputPartition] = {
     def mk(f: graft.sources.FileAction, rowSkip: Long): DeltaShareInputPartition = {

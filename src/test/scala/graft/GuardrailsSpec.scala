@@ -1813,6 +1813,20 @@ class GuardrailsSpec extends AnyFunSuite {
         "not a parquet footer".getBytes("UTF-8"))
       ()
     }
+    // an INT32 intent is ill-typed, not absent: the driver-side read
+    // names the marker dir, and the guard refuses it as corrupt
+    import spark.implicits._
+    Seq(0).toDF("fold_seq").write.mode("overwrite")
+      .parquet(out + "_fold_intent")
+    val e0 = intercept[IllegalStateException](operators.DriverParquet
+      .headLong(spark, out + "_fold_intent", "fold_seq"))
+    assert(e0.getMessage.contains(out + "_fold_intent"),
+      s"an ill-typed marker must name its dir: ${e0.getMessage}")
+    val e0b = intercept[IllegalStateException] {
+      Similarity.knnTopKFromLayout(spark, out, queries, k = 5).collect()
+    }
+    assert(e0b.getMessage.contains("corrupt"),
+      s"an INT32 intent must be named corrupt: ${e0b.getMessage}")
     // corrupt intent beside a valid done → loud (pre-round-19
     // behavior, kept)
     corrupt(out + "_fold_intent")

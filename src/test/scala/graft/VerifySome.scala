@@ -1,6 +1,6 @@
-// dump SEVERAL queries' results + oracle sql for fast local iteration:
+// dump SEVERAL queries' results + oracle sql for fast local iteration,
+// on graft.Verify's session and output format:
 // runMain VerifySome q1,q2,... <sfDir> <outDir>
-import org.apache.spark.sql.SparkSession
 object VerifySome {
   def main(args: Array[String]): Unit = {
     if (args.length < 3) {
@@ -8,31 +8,7 @@ object VerifySome {
       sys.exit(2)
     }
     val Array(names, sfDir, outDir) = args.take(3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", false).appName("verifysome").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val list = names.split(",").map(_.trim).filter(_.nonEmpty)
-    list.foreach { name =>
-      graft.SparkEntry.queries(name)(spark, sfDir)
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-    }
-    def esc(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < 0x20 => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val entries = list.flatMap(n =>
-      graft.SparkEntry.oracleSql.get(n).map(sql => s""""$n": "${esc(sql)}""""))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"),
-      entries.mkString("{", ",\n", "}")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
+    graft.Verify.run(names.split(",").map(_.trim).filter(_.nonEmpty).toSeq,
+      sfDir, outDir)
   }
 }
